@@ -1,8 +1,10 @@
 #!/usr/bin/env python
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+JSON line: ``{"metric": ..., "value": total_sec, "unit": "sec",
+"queries": {name: sec}, "sf": ..., "errors": {name: message}}``.  A
+query that raises is named under "errors" and left out of "queries" and
+"value"; the rest are still timed.
 
 Each query is timed as a full execution to completion
 (``df.write.format("noop")`` pattern via count of a cached action would
@@ -203,10 +205,19 @@ def main() -> None:
         _warm_worker, schema="id long"
     ).collect()
 
+    # one failing query (e.g. a missing fixture) must not wipe out the
+    # record of the others: it is reported by name under "errors" and
+    # gets no time, so it is left out of "value" too
     timings: dict[str, float] = {}
+    errors: dict[str, str] = {}
     for name in names:
         start = time.perf_counter()
-        specs[name].spark(spark, sf_dir).collect()
+        try:
+            specs[name].spark(spark, sf_dir).collect()
+        except Exception as e:  # noqa: BLE001 - reported by name below
+            msg = str(e).strip().splitlines()
+            errors[name] = f"{type(e).__name__}: {msg[0] if msg else ''}"[:300]
+            continue
         timings[name] = round(time.perf_counter() - start, 4)
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -217,6 +228,7 @@ def main() -> None:
             "unit": "sec",
             "queries": timings,
             "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+            "errors": errors,
         }
     )
     # truncation-proofing (round 10, additions-only): the one-line JSON

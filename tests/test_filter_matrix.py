@@ -381,7 +381,10 @@ def test_lz4_bzip2_create_compressor(tmp_path):
 
 def test_encrypted_mixed_pipeline(tmp_path):
     """GCM chunk sealing wraps whatever the pipeline produced — the new
-    codecs compose with encryption unchanged."""
+    codecs compose with encryption unchanged.  The plaintexts are long
+    enough (>= 8 bytes) that neither can turn up in the ciphertext by
+    chance, so BOTH must be absent."""
+    a, b = "sentinel-alpha-7f3e", "sentinel-bravo-2c91"
     arr = str(tmp_path / "enc")
     create_native_array(
         arr,
@@ -391,10 +394,10 @@ def test_encrypted_mixed_pipeline(tmp_path):
         encryption_key=b"\x07" * 32,
     )
     write_native_fragment(
-        arr, {"k": [1, 2, 3], "lang": ["aa", "bb", "aa"]}, ts=2, version=19
+        arr, {"k": [1, 2, 3], "lang": [a, b, a]}, ts=2, version=19
     )
     _s, rows = read_native_array(arr)
-    assert rows == [(1, "aa"), (2, "bb"), (3, "aa")]
+    assert rows == [(1, a), (2, b), (3, a)]
     # ciphertext at rest: the dictionary entries must not be readable
     frag_dir = None
     fr = os.path.join(arr, "__fragments")
@@ -404,7 +407,7 @@ def test_encrypted_mixed_pipeline(tmp_path):
         for f in os.listdir(frag_dir)
         if f.endswith(".tdb")
     )
-    assert b"aa" not in blob or b"bb" not in blob
+    assert a.encode() not in blob and b.encode() not in blob
 
 
 # ----------------------------------------------- DDL filter surface

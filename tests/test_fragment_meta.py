@@ -279,7 +279,7 @@ def test_distributed_fold_equals_driver_fold(tmp_path, spark):
     assert d1["schema_fp"] == d2["schema_fp"]
 
 
-def test_maintain_array_one_call(tmp_path, spark):
+def test_maintain_array_one_call(tmp_path, spark, monkeypatch):
     """maintain_array runs the whole consolidation matrix in safe
     order: incremental fragments first, folds cover the merged
     layout, one vacuum retires everything superseded — and reads are
@@ -292,15 +292,22 @@ def test_maintain_array_one_call(tmp_path, spark):
         write_array_metadata,
     )
 
+    from tiledb_mariadb_spark.sources import tiledb_array as ta
+
     arr = _mk(tmp_path, n_frags=6)
     write_array_metadata(arr, {"a": 1}, ts=1)
     write_array_metadata(arr, {"b": 2}, ts=2)
+    # 135 cells are one split's work: keep the weighted two-way cut
+    # that the before/after reads compare across
+    monkeypatch.setattr(ta, "CELLS_PER_SPLIT", 50)
+    assert read_array(spark, arr, target_splits=2).rdd.getNumPartitions() == 2
     before = sorted(
         map(tuple, read_array(spark, arr, target_splits=2).collect())
     )
     out = maintain_array(spark, arr)
     assert out["fragments"] >= 1
     assert out["fragment_meta"] and out["vacuumed"] >= 1
+    assert read_array(spark, arr, target_splits=2).rdd.getNumPartitions() == 2
     after = sorted(
         map(tuple, read_array(spark, arr, target_splits=2).collect())
     )

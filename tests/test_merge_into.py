@@ -46,13 +46,26 @@ def _src(spark, rows):
     return spark.createDataFrame(rows, "k long, v long")
 
 
-def test_update_skip(spark, tmp_path):
+def test_update_skip(spark, tmp_path, monkeypatch):
+    """The probe read is cut into several splits (stored keys 2 and 3
+    of the box [2, 4] in different ones): matches are found across the
+    cuts."""
+    from tiledb_mariadb_spark.sources import tiledb_array as ta
+
+    plans = []
+    real = ta.plan_splits
+    monkeypatch.setattr(ta, "CELLS_PER_SPLIT", 1)
+    monkeypatch.setattr(
+        ta, "plan_splits", lambda *a, **k: plans.append(real(*a, **k))
+        or plans[-1],
+    )
     uri = _mk(tmp_path)
     c = merge_into_array(
         spark, uri, _src(spark, [(2, 99), (4, 44)]),
         when_matched="update", when_not_matched="skip", ts=2000,
     )
     assert c == {"matched": 1, "not_matched": 1, "written": 1}
+    assert len(plans) == 1 and len(plans[0]) == 2  # the probe's splits
     assert _state(spark, uri) == [(1, 10), (2, 99), (3, 30)]
 
 
@@ -270,3 +283,39 @@ def test_source_bounds_hint_matches_computed(spark, tmp_path):
             when_matched="skip", when_not_matched="insert", ts=5000,
             source_bounds={"wrong": (0, 1)},
         )
+
+
+@pytest.mark.parametrize("clauses", [
+    ("skip", "insert"),    # fused probe + write
+    ("update", "insert"),  # counts over a pure upsert
+    ("delete", "skip"),    # delete-key collection
+])
+def test_source_bounds_too_narrow_fails_loudly(spark, tmp_path, clauses):
+    """A caller box that misses a source key would confine the probe
+    away from that key's match and misread it as a new insert: the
+    merge must raise instead, for every clause shape that probes.  The
+    out-of-box key's row never lands (tasks whose rows all lie inside
+    the box decide their matches correctly and may still write)."""
+    uri = _mk(tmp_path)
+    matched, not_matched = clauses
+    with pytest.raises(Exception, match="outside source_bounds"):
+        merge_into_array(
+            spark, uri, _src(spark, [(2, 99), (3, 77), (4, 44)]),
+            when_matched=matched, when_not_matched=not_matched, ts=2000,
+            source_bounds={"k": (3, 4)},  # misses k=2, which matches
+        )
+    state = _state(spark, uri)
+    assert (2, 20) in state and (2, 99) not in state
+
+
+def test_source_bounds_false_empty_claim_fails_loudly(spark, tmp_path):
+    """The (None, None) sentinel claims an empty source; a source with
+    rows must not be silently dropped."""
+    uri = _mk(tmp_path)
+    with pytest.raises(ValueError, match="claims an empty source"):
+        merge_into_array(
+            spark, uri, _src(spark, [(4, 44)]),
+            when_matched="skip", when_not_matched="insert", ts=2000,
+            source_bounds={"k": (None, None)},
+        )
+    assert _state(spark, uri) == [(1, 10), (2, 20), (3, 30)]

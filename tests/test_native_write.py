@@ -329,8 +329,9 @@ def test_split_projection_skips_unrequested_attrs(tmp_path):
     assert only_a < both
 
 
-def test_connector_split_tasks_bounded(spark, tmp_path):
+def test_connector_split_tasks_bounded(spark, tmp_path, monkeypatch):
     """Per-task rows match split bounds through the full connector."""
+    from tiledb_mariadb_spark.sources import tiledb_array as ta
     from tiledb_mariadb_spark.sources.tiledb_array import (
         ArrayInfo,
         AttrInfo,
@@ -353,10 +354,14 @@ def test_connector_split_tasks_bounded(spark, tmp_path):
         spark.range(0, 4000).selectExpr("id", "id * 3 AS val"),
         uri, backend=be,
     )
+    # 2000 cells are one split's work; a lowered constant keeps the
+    # read cut into several splits, which is what this test is about
+    monkeypatch.setattr(ta, "CELLS_PER_SPLIT", 100)
     out = read_array(
         spark, uri, backend=be, dim_ranges={"id": (1000, 2999)},
         target_splits=4,
     )
+    assert out.rdd.getNumPartitions() == 4
     per_task = (
         out.selectExpr("spark_partition_id() AS p", "id")
         .groupBy("p").count().collect()
@@ -951,10 +956,13 @@ def test_metadata_consolidation(tmp_path):
     }
 
 
-def test_write_array_explicit_timestamp(spark, tmp_path):
+def test_write_array_explicit_timestamp(spark, tmp_path, monkeypatch):
     """write_array(ts=...): TileDB's open-at-timestamp writes through
     the connector — rapid successive writes stay deterministic under
-    newest-wins, and time travel sees each layer exactly."""
+    newest-wins, and time travel sees each layer exactly.  The reads
+    are cut into several splits inside the overwritten band, so each
+    split resolves newest-wins on its own."""
+    from tiledb_mariadb_spark.sources import tiledb_array as ta
     from tiledb_mariadb_spark.sources.tiledb_array import (
         ArrayInfo,
         AttrInfo,
@@ -976,6 +984,9 @@ def test_write_array_explicit_timestamp(spark, tmp_path):
     df2 = spark.range(50, 100).selectExpr("id", "id * 100 AS v")
     write_array(df1.repartition(2), uri, ts=1000)
     write_array(df2.repartition(2), uri, ts=2000)  # same-wall-ms safe
+    monkeypatch.setattr(ta, "CELLS_PER_SPLIT", 16)
+    assert read_array(spark, uri).rdd.getNumPartitions() > 1
+    assert read_array(spark, uri, at=1500).rdd.getNumPartitions() > 1
     now = sorted(
         (r.id, r.v) for r in read_array(spark, uri).collect()
     )

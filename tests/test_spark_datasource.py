@@ -256,9 +256,11 @@ def test_in_pushdown_exact_multirange(spark, arr):
     assert rows == [(7, 3.5), (8, 4.0), (42, 21.0), (300, 150.0)]
 
 
-def test_all_null_split_keeps_schema(spark, tmp_path):
+def test_all_null_split_keeps_schema(spark, tmp_path, monkeypatch):
     """A split whose nullable column is entirely NULL must still produce
     a bigint Arrow batch (explicit schema, no null-type drift)."""
+    from tiledb_mariadb_spark.sources import tiledb_array as ta
+
     register_tiledb_native(spark)
     uri = str(tmp_path / "nulls")
     create_native_array(
@@ -277,6 +279,17 @@ def test_all_null_split_keeps_schema(spark, tmp_path):
     )
     rows = sorted((r.k, r.n) for r in out.collect())
     assert rows == [(1, None), (2, None), (500, 7), (501, 8)]
+    # 4 cells are one split's work; planned in-process with a lowered
+    # constant, the all-NULL keys 1-2 and the valued 500-501 land in
+    # different splits, and every split's batch keeps the bigint type
+    monkeypatch.setattr(ta, "CELLS_PER_SPLIT", 1)
+    r = TileDBNativeReader(uri, None, 4, ["k", "n"])
+    parts = r.partitions()
+    assert len(parts) > 1
+    batches = [b for p in parts for b in r.read(p)]
+    assert len(batches) == 2
+    assert [str(b.schema.field("n").type) for b in batches] == ["int64"] * 2
+    assert batches[0].column("n").null_count == batches[0].num_rows
 
 
 def test_format_scan_enum_labels_and_stats_pruning(spark):

@@ -9,6 +9,7 @@ import glob
 
 from pyspark.sql import functions as F
 
+from tiledb_mariadb_spark.sources import tiledb_array as ta
 from tiledb_mariadb_spark.sources.tiledb_array import (
     ArrayInfo,
     AttrInfo,
@@ -110,7 +111,7 @@ def test_time_travel_hides_newer_fragments(spark, tmp_path):
     assert info_now == 2001 and info_then == 2000
 
 
-def test_string_dim_split_planning(spark, tmp_path):
+def test_string_dim_split_planning(spark, tmp_path, monkeypatch):
     """Round 7: string-keyed arrays are cut at the fragments' var-NED
     boundary keys instead of collapsing to one task.  Splits are
     disjoint-and-covering under the k+"\\0" successor rule (no
@@ -151,10 +152,12 @@ def test_string_dim_split_planning(spark, tmp_path):
     assert sk and sk[0] == "doc-00000" and sk[-1] == "doc-00299"
     splits = plan_splits(be.info(uri), None, 8, string_keys=sk)
     assert len(splits) > 1
-    # disjoint + covering: split reads sum to exactly the table
-    rows = [r.doc_id for r in read_array(
-        spark, uri, target_splits=8
-    ).collect()]
+    # disjoint + covering: split reads sum to exactly the table (300
+    # cells are one split's work; a lowered constant keeps the cuts)
+    monkeypatch.setattr(ta, "CELLS_PER_SPLIT", 50)
+    df = read_array(spark, uri, target_splits=8)
+    assert df.rdd.getNumPartitions() > 1
+    rows = [r.doc_id for r in df.collect()]
     assert len(rows) == 300 and len(set(rows)) == 300
     # NUL-successor lower bound is EXCLUSIVE of the boundary key on
     # both read paths (numpy would otherwise strip the trailing NUL)

@@ -17,7 +17,12 @@ official extension API.
 Options:
 - ``path``   array directory (required)
 - ``at``     unix-millis time travel (open_at parity)
-- ``target_splits``  max partitions (default 16)
+- ``target_splits``  at most this many partitions (default 16); the
+  count is ``min(target_splits, ceil(cells / CELLS_PER_SPLIT))`` over
+  the metadata upper bound on the pushed box's cells
+  (``tiledb_array.size_read_splits``): every partition is a Python
+  task with a fixed cost, so a small array or a narrow box reads as
+  one task
 - write: ``dims`` comma-separated dim column names +
   ``domain.<dim>`` "lo:hi" bounds — auto-creates the array on first
   write when it does not exist.
@@ -293,7 +298,9 @@ class TileDBNativeReader(DataSourceReader):
 
     def partitions(self):
         from tiledb_mariadb_spark.sources.tiledb_array import (  # noqa: PLC0415
+            estimate_read_cells,
             plan_splits,
+            size_read_splits,
         )
 
         be = _backend(self.encryption_key)
@@ -344,8 +351,11 @@ class TileDBNativeReader(DataSourceReader):
                 skeys_fn(self.uri, at=self.at, since=self.since)
                 if skeys_fn else None
             )
+        target = size_read_splits(self.target_splits, estimate_read_cells(
+            be, self.uri, self._info, self.dim_ranges, at=self.at,
+        ))
         splits = plan_splits(
-            self._info, self.dim_ranges, self.target_splits,
+            self._info, self.dim_ranges, target,
             weights=weights, string_keys=skeys,
         )
         return [_SplitPartition(s) for s in splits]

@@ -479,6 +479,21 @@ class NativeDecoderBackend(ArrayBackend):
         except (OSError, ValueError):
             return None
 
+    def estimate_cells(self, uri, ranges, at=None):
+        """Metadata-only UPPER BOUND on the cells inside ``ranges`` (one
+        inclusive (lo, hi) per dim, None = unbounded): R-tree leaf
+        tiles for sparse arrays, the box volume for dense ones.  None =
+        not provable."""
+        from tiledb_mariadb_spark.sources.tiledb_native import (  # noqa: PLC0415
+            estimate_range_cells,
+        )
+
+        try:
+            self._reg(uri)
+            return estimate_range_cells(uri, ranges, at=at)
+        except (OSError, ValueError):
+            return None
+
     def window_ned(self, uri, since=None, at=None):
         """Union bounding box of the fragments visible in [since, at]
         — metadata only; None = not provable, [] = empty window."""
@@ -883,9 +898,12 @@ def plan_splits(
                 k for k in string_keys
                 if (lo0 is None or k >= lo0) and (hi0 is None or k < hi0)
             })
-            if len(cuts) > max(1, target_splits) - 1:
+            keep = max(1, target_splits) - 1
+            if not keep:
+                cuts = []
+            elif len(cuts) > keep:
                 # thin evenly to ≤ target_splits-1 cut points
-                step = -(-len(cuts) // (max(1, target_splits) - 1))
+                step = -(-len(cuts) // keep)
                 cuts = cuts[step - 1::step]
             if cuts:
                 succ = (
@@ -955,6 +973,56 @@ def plan_splits(
     return splits
 
 
+# Every read split becomes one Spark Python task, which costs about
+# 0.2 s before it decodes a cell (4 cores, local mode) — roughly what
+# decoding this many cells costs.  Fewer cells per split buy no speed.
+CELLS_PER_SPLIT = 262144
+
+
+def estimate_read_cells(
+    backend: ArrayBackend,
+    uri: str,
+    info: ArrayInfo,
+    dim_ranges: Optional[dict[str, Any]] = None,
+    at: Optional[int] = None,
+) -> Optional[int]:
+    """Metadata-only UPPER BOUND on the cells a read of ``dim_ranges``
+    (the pushed and condition-narrowed box; a list value is IN-list
+    pieces, bounded by their hull) can return — the est_result_size
+    analog the reference sizes its scans by (computeRecordsUB,
+    ha_mytile.cc:1424-1468).  The backend's ``estimate_cells``
+    answers: R-tree leaf tiles or footer counts for sparse arrays, the
+    exact box volume for dense ones.  None = nothing provable."""
+    fn = getattr(backend, "estimate_cells", None)
+    if fn is None:
+        return None
+    dim_ranges = dim_ranges or {}
+    ranges = []
+    for d in info.dims:
+        r = dim_ranges.get(d.name)
+        if isinstance(r, list):
+            pieces = merge_ranges(list(r))
+            if not pieces:
+                return 0
+            r = (pieces[0][0], pieces[-1][1])
+        ranges.append(tuple(r) if r is not None else (None, None))
+    return fn(uri, ranges, at=at)
+
+
+def size_read_splits(
+    target_splits: int, estimated_cells: Optional[int]
+) -> int:
+    """The split count of a read: ``target_splits`` caps it, and no
+    split is planned for fewer than CELLS_PER_SPLIT estimated cells —
+    ``min(target_splits, ceil(estimated_cells / CELLS_PER_SPLIT))``,
+    at least 1.  An unknown estimate (None) keeps ``target_splits``.
+    The bound only over-counts, so a real scan is never starved; a
+    needle, a small array or a narrow box plans one task."""
+    if estimated_cells is None:
+        return target_splits
+    return max(1, min(target_splits, -(-estimated_cells // CELLS_PER_SPLIT)))
+
+
 # --- the connector ----------------------------------------------------------
 
 
@@ -981,6 +1049,13 @@ def read_array(
     attribute predicates pushed INTO the backend (QueryCondition analog,
     t/query_conditions.test) — each is ``(col, op[, value])``, ANDed;
     rows are filtered before they cross the backend→Arrow boundary.
+
+    ``target_splits`` is the MOST tasks the scan launches: the count is
+    ``min(target_splits, ceil(cells / CELLS_PER_SPLIT))`` over the
+    metadata upper bound on the narrowed box's cells
+    (:func:`size_read_splits`), because each task pays a fixed cost
+    before it reads a cell.  A small array or a narrow box reads as
+    one task; IN-list pieces still get one split each.
 
     Default backend: libtiledb when the wheel exists, else the
     pure-Python format decoder (read-only) — so a bare on-disk array is
@@ -1111,9 +1186,11 @@ def read_array(
         skeys = (
             skeys_fn(uri, at=at, since=since) if skeys_fn else None
         )
+    target = size_read_splits(target_splits, estimate_read_cells(
+        backend, uri, info, dim_ranges, at=at,
+    ))
     splits = plan_splits(
-        info, dim_ranges, target_splits,
-        weights=weights, string_keys=skeys,
+        info, dim_ranges, target, weights=weights, string_keys=skeys,
     )
     ddl = ", ".join(
         f"{c} {next(x.dtype for x in info.dims + info.attrs if x.name == c)}"
@@ -1647,6 +1724,36 @@ def _merge_write_and_count(
     return sum(r.m for r in rows), sum(r.n for r in rows)
 
 
+def _check_source_bounds(
+    source: DataFrame, source_bounds: dict, dim_names: list[str]
+) -> DataFrame:
+    """``source`` with a pass-through filter that raises on any row
+    outside the caller's ``source_bounds`` — it runs in whichever job
+    consumes the source, so checking the hint adds no Spark job.  An
+    all-None box claims an EMPTY source; nothing would consume it, so
+    that claim is checked with one ``limit(1)`` job here."""
+    from pyspark.sql import functions as F  # noqa: PLC0415
+
+    if source_bounds[dim_names[0]][0] is None:
+        if source.limit(1).count():
+            raise ValueError(
+                "source_bounds claims an empty source, but the source "
+                "has rows"
+            )
+        return source
+    outside = None
+    for d in dim_names:
+        lo, hi = source_bounds[d]
+        c = (F.col(d) < F.lit(lo)) | (F.col(d) > F.lit(hi))
+        outside = c if outside is None else (outside | c)
+    return source.filter(
+        F.when(outside, F.raise_error(F.lit(
+            f"merge_into_array: a source key lies outside source_bounds "
+            f"{ {d: tuple(source_bounds[d]) for d in dim_names} }"
+        ))).otherwise(F.lit(True))
+    )
+
+
 def merge_into_array(
     spark: SparkSession,
     uri: str,
@@ -1750,10 +1857,11 @@ def merge_into_array(
         # an empty source) lets a caller that already knows the box —
         # e.g. one that computed it CONCURRENTLY with a preceding
         # ingest job (guide §2.6) — skip this aggregation job.  The
-        # box only CONFINES the probe read, but the caller's values
-        # must cover the true min/max: a too-narrow box would misread
-        # matched keys as new, so only pass bounds computed from the
-        # same source frame.
+        # box CONFINES the probe read, so a too-narrow box would
+        # misread matched keys as new: the hint is checked, not
+        # trusted — every source row is tested against it inside the
+        # tasks that already consume the source, and one outside it
+        # fails the merge before its task writes.
         if source_bounds is not None:
             missing_b = [d for d in dim_names if d not in source_bounds]
             if missing_b:
@@ -1764,6 +1872,7 @@ def merge_into_array(
             for d in dim_names:
                 lo, hi = source_bounds[d]
                 bounds[f"{d}_lo"], bounds[f"{d}_hi"] = lo, hi
+            source = _check_source_bounds(source, source_bounds, dim_names)
         else:
             bounds = source.agg(
                 *[F.min(d).alias(f"{d}_lo") for d in dim_names],

@@ -754,7 +754,9 @@ def main(argv=None) -> int:
         # partitions).  Single unbounded split when bounds aren't
         # JSON-expressible (bytes dims).
         from tiledb_mariadb_spark.sources.tiledb_array import (  # noqa: PLC0415
+            estimate_read_cells,
             plan_splits,
+            size_read_splits,
         )
 
         be = NativeDecoderBackend(encryption_key=a.encryption_key)
@@ -787,27 +789,10 @@ def main(argv=None) -> int:
                 skeys = be.string_split_keys(a.uri, at=a.at)
             # size the task count by the metadata UPPER BOUND on
             # matching cells (narrowed by pushed ranges + the
-            # condition-NED): a needle/top-k query plans one task, a
-            # full scan keeps target_splits — an upper bound can only
-            # over-parallelize, never starve a real scan
-            target = a.target_splits
-            if dim_ranges:
-                from tiledb_mariadb_spark.sources.tiledb_native import (  # noqa: PLC0415
-                    estimate_range_cells,
-                )
-
-                try:
-                    rlist = [
-                        tuple(dim_ranges.get(d.name, (None, None)))
-                        for d in info.dims
-                    ]
-                    est = estimate_range_cells(a.uri, rlist, at=a.at)
-                    if est is not None:
-                        target = max(
-                            1, min(target, -(-est // 262144))
-                        )
-                except (OSError, ValueError):
-                    pass
+            # condition-NED), the rule every read planner shares
+            target = size_read_splits(a.target_splits, estimate_read_cells(
+                be, a.uri, info, dim_ranges, at=a.at,
+            ))
             splits = plan_splits(
                 info, dim_ranges or None, target,
                 weights=weights, string_keys=skeys,
