@@ -466,11 +466,13 @@ def test_skewed_side_weights_balance_splits(spark, tmp_path):
     assert got.count() == len(set(ka) & set(kb))
 
 
-def test_join_after_deletes_and_consolidation(spark, tmp_path):
+def test_join_after_deletes_and_consolidation(spark, tmp_path, monkeypatch):
     """The join rides read_range, so the full lifecycle applies: a
     delete commit on one side and a maintenance pass on the other must
     leave join results identical to the shuffle-join oracle (inner AND
-    left), with the tombstoned rows gone."""
+    left), with the tombstoned rows gone.  The maintenance pass stages
+    several fragments, so join splits meet consolidation split edges."""
+    from tiledb_mariadb_spark.sources import tiledb_array as ta
     from tiledb_mariadb_spark.sources.tiledb_array import maintain_array
     from tiledb_mariadb_spark.sources.tiledb_native_write import (
         write_delete_condition,
@@ -479,7 +481,10 @@ def test_join_after_deletes_and_consolidation(spark, tmp_path):
     ua, ub = _mk_pair(tmp_path, n_a=300, n_b=300, b_offset=100,
                       n_frags=4)
     write_delete_condition(ub, [("score", ">", 80.0)], ts=99)
-    maintain_array(spark, ua)
+    with monkeypatch.context() as m:
+        # 300 cells are one split's work; cut the consolidation finer
+        m.setattr(ta, "CELLS_PER_SPLIT", 50)
+        assert maintain_array(spark, ua)["fragments"] > 1
     for how in ("inner", "left"):
         got = copartitioned_join_arrays(spark, ua, ub, how=how,
                                         target_splits=5)

@@ -319,3 +319,60 @@ def test_source_bounds_false_empty_claim_fails_loudly(spark, tmp_path):
             source_bounds={"k": (None, None)},
         )
     assert _state(spark, uri) == [(1, 10), (2, 20), (3, 30)]
+
+
+def test_counted_upsert_is_one_fused_pass(spark, tmp_path, monkeypatch):
+    """update+insert with counts writes inside the fused write-and-count
+    pass, so ``write_array`` is never called; counts and final state
+    are those of ``test_pure_upsert``."""
+    import tiledb_mariadb_spark.sources.tiledb_array as ta
+
+    uri = _mk(tmp_path)
+    calls = []
+    real = ta.write_array
+    monkeypatch.setattr(
+        ta, "write_array", lambda *a, **k: calls.append(1) or real(*a, **k)
+    )
+    c = merge_into_array(
+        spark, uri, _src(spark, [(2, 99), (4, 44)]), ts=2000
+    )
+    assert calls == []
+    assert c == {"matched": 1, "not_matched": 1, "written": 2}
+    assert _state(spark, uri) == [(1, 10), (2, 99), (3, 30), (4, 44)]
+
+
+@pytest.mark.parametrize("clauses, counts", [
+    (("update", "insert"), True),   # checked inside the bounds aggregate
+    (("update", "skip"), True),
+    (("skip", "insert"), True),
+    (("update", "insert"), False),  # pure upsert: its own limit(1) job
+])
+def test_source_dups_raise_before_any_write(
+    spark, tmp_path, monkeypatch, clauses, counts
+):
+    """Duplicate source keys refuse the merge before the target is
+    probed and before any fragment lands."""
+    import os
+
+    import tiledb_mariadb_spark.sources.tiledb_array as ta
+    from tiledb_mariadb_spark.sources.tiledb_native import _fragment_dirs
+
+    uri = _mk(tmp_path)
+    frags = _fragment_dirs(uri)
+    commits = sorted(os.listdir(os.path.join(uri, "__commits")))
+    probes = []
+    real = ta.read_array
+    monkeypatch.setattr(
+        ta, "read_array", lambda *a, **k: probes.append(1) or real(*a, **k)
+    )
+    matched, not_matched = clauses
+    with pytest.raises(ValueError, match="duplicate keys in source"):
+        merge_into_array(
+            spark, uri, _src(spark, [(2, 99), (4, 44), (4, 45)]),
+            when_matched=matched, when_not_matched=not_matched, ts=2000,
+            return_counts=counts,
+        )
+    assert probes == []
+    assert _fragment_dirs(uri) == frags
+    assert sorted(os.listdir(os.path.join(uri, "__commits"))) == commits
+    assert _state(spark, uri) == [(1, 10), (2, 20), (3, 30)]

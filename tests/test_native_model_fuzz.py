@@ -168,12 +168,19 @@ def test_native_op_sequence_fuzz(tmp_path, seed):
 
 
 @pytest.mark.parametrize("seed", range(3))
-def test_maintenance_interleaved_fuzz(tmp_path, spark, seed):
+def test_maintenance_interleaved_fuzz(tmp_path, spark, seed, monkeypatch):
     """maintain_array (the full consolidation matrix + vacuum) lands
     between random write/delete batches; the full view is invariant
     across every maintenance call and both readers agree throughout —
-    including window reads after merged fragments replace originals."""
+    including window reads after merged fragments replace originals.
+    The arrays hold tens of cells, so a lowered CELLS_PER_SPLIT keeps
+    the consolidations cutting several splits (merged fragments meet at
+    split edges)."""
+    from tiledb_mariadb_spark.sources import tiledb_array as ta
     from tiledb_mariadb_spark.sources.tiledb_array import maintain_array
+
+    monkeypatch.setattr(ta, "CELLS_PER_SPLIT", 4)
+    staged = []
 
     rnd = random.Random(7000 + seed)
     arr = str(tmp_path / "arr")
@@ -199,7 +206,8 @@ def test_maintenance_interleaved_fuzz(tmp_path, spark, seed):
             ts += 1
         before = _read_both(arr)
         _FMETA_CACHE.clear()
-        maintain_array(spark, arr, incremental=bool(_round % 2))
+        out = maintain_array(spark, arr, incremental=bool(_round % 2))
+        staged.append(out["fragments"])
         assert _read_both(arr) == before, "maintain_array changed the view"
         # post-maintenance conditioned reads keep the prune-only contract
         c = rnd.randrange(6)
@@ -207,3 +215,5 @@ def test_maintenance_interleaved_fuzz(tmp_path, spark, seed):
         want = [r for r in before if r[1] == c]
         assert [r for r in got if r[1] == c] == want
         assert set(got) <= set(before)
+    # every maintenance call staged several split fragments
+    assert all(n > 1 for n in staged), staged

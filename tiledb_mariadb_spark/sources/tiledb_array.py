@@ -1788,7 +1788,11 @@ def merge_into_array(
     from new keys probe the target's keys with a scan CONFINED to the
     source keys' bounding box (condition-NED/R-tree pruning applies),
     then anti/semi-join source-side — at 100 TB the probe reads the
-    fragments the source box touches, never the corpus.
+    fragments the source box touches, never the corpus.  Every shape
+    but 'delete' (counted upserts included) then runs as ONE fused
+    pass that writes and counts; with no ``source_bounds`` the
+    source-box aggregate also runs the 'error' duplicate check, so a
+    counted merge makes one aggregate pass and one write pass.
 
     ``on_source_dups``: duplicate source keys in one batch would land
     as duplicate coordinates in one fragment (undefined read order —
@@ -1828,15 +1832,24 @@ def merge_into_array(
 
     from pyspark.sql import Window, functions as F  # noqa: PLC0415
 
-    if on_source_dups == "error":
+    dup_msg = (
+        "duplicate keys in source (set on_source_dups='last_wins' or "
+        "'allow')"
+    )
+    need_split = (when_matched, when_not_matched) != ("update", "insert")
+    probe = need_split or return_counts
+    # with no caller box, the bounds aggregate below also answers the
+    # duplicate check (one job instead of two); it still runs before
+    # any read of the target and before any write
+    dups_in_bounds = (
+        on_source_dups == "error" and probe and source_bounds is None
+    )
+    if on_source_dups == "error" and not dups_in_bounds:
         dup = (
             source.groupBy(*dim_names).count().filter(F.col("count") > 1)
         )
         if dup.limit(1).count():
-            raise ValueError(
-                "duplicate keys in source (set on_source_dups="
-                "'last_wins' or 'allow')"
-            )
+            raise ValueError(dup_msg)
     elif on_source_dups == "last_wins":
         w = Window.partitionBy(*dim_names).orderBy(
             F.monotonically_increasing_id().desc()
@@ -1848,151 +1861,137 @@ def merge_into_array(
         )
 
     counts = {"matched": -1, "not_matched": -1, "written": -1}
-    flagged = None
-    fused = None
-    need_split = (when_matched, when_not_matched) != ("update", "insert")
-    if need_split or return_counts:
-        # probe the target keys only inside the source's bounding box.
-        # ``source_bounds`` ({dim: (lo, hi)} or {dim: (None, None)} for
-        # an empty source) lets a caller that already knows the box —
-        # e.g. one that computed it CONCURRENTLY with a preceding
-        # ingest job (guide §2.6) — skip this aggregation job.  The
-        # box CONFINES the probe read, so a too-narrow box would
-        # misread matched keys as new: the hint is checked, not
-        # trusted — every source row is tested against it inside the
-        # tasks that already consume the source, and one outside it
-        # fails the merge before its task writes.
-        if source_bounds is not None:
-            missing_b = [d for d in dim_names if d not in source_bounds]
-            if missing_b:
-                raise ValueError(
-                    f"source_bounds lacks dimensions: {missing_b}"
-                )
-            bounds = {}
-            for d in dim_names:
-                lo, hi = source_bounds[d]
-                bounds[f"{d}_lo"], bounds[f"{d}_hi"] = lo, hi
-            source = _check_source_bounds(source, source_bounds, dim_names)
-        else:
-            bounds = source.agg(
-                *[F.min(d).alias(f"{d}_lo") for d in dim_names],
-                *[F.max(d).alias(f"{d}_hi") for d in dim_names],
-            ).collect()[0]
-        if bounds[f"{dim_names[0]}_lo"] is None:
-            to_write = source.limit(0)
-            matched = not_matched = 0
-            counts["written"] = 0  # empty source: nothing to write
-        else:
-            box = {
-                d: (bounds[f"{d}_lo"], bounds[f"{d}_hi"])
-                for d in dim_names
-            }
-            # distinct: an allows_dups target may hold the same key
-            # many times — "matched" means the key exists, and a dup
-            # would fan the probe join out (wrong counts, dup writes)
-            tgt_keys = read_array(
-                spark, uri, backend=backend, columns=[],
-                dim_ranges=box, target_splits=target_splits,
-            ).select(*dim_names).distinct().withColumn("__m", F.lit(1))
-            flagged = source.join(tgt_keys, on=dim_names, how="left")
-            if need_split and when_matched != "delete":
-                # FUSE the probe counts into the write (round 10): the
-                # counts aggregation and the fragment write were two
-                # actions over the same probe join (persist + agg job +
-                # write job).  One mapInPandas pass now filters the
-                # clause-kept rows, writes them, and returns per-task
-                # (matched, total) rows with the action's result —
-                # exactly-once by construction (the counts ride the
-                # task results, not accumulators), identical fragment
-                # layout (the write consumes the same join-output
-                # partitions the old filtered write consumed).
-                writes_any = (
-                    when_matched == "update" or when_not_matched == "insert"
-                )
-                if writes_any or return_counts:
-                    m_, n_ = _merge_write_and_count(
-                        flagged, uri, backend,
-                        when_matched, when_not_matched, ts,
-                    )
-                    matched, not_matched = m_, n_ - m_
-                if not writes_any:
-                    # no clause writes rows (skip + skip): nothing lands
-                    counts["written"] = 0
-                fused = True
-            else:
-                # delete clause (the driver-side key collection below
-                # consumes the probe a second time) and the
-                # counts-over-pure-upsert shape keep the persist + agg
-                # + filtered-write structure
-                if return_counts:
-                    flagged = flagged.persist()
-                keep = []
-                if when_matched == "update":
-                    keep.append(F.col("__m").isNotNull())
-                if when_not_matched == "insert":
-                    keep.append(F.col("__m").isNull())
-                if keep:
-                    to_write = flagged.filter(
-                        keep[0] if len(keep) == 1 else (keep[0] | keep[1])
-                    ).drop("__m")
-                else:
-                    # statically empty, never launch the write job
-                    to_write = flagged.limit(0).drop("__m")
-                    counts["written"] = 0
-                if return_counts:
-                    agg = flagged.agg(
-                        F.count(F.col("__m")).alias("m"),
-                        F.count(F.lit(1)).alias("n"),
-                    ).collect()[0]
-                    matched, not_matched = agg["m"], agg["n"] - agg["m"]
+    if not probe:
+        # pure upsert: one fragment write, zero target reads
+        write_array(source, uri, backend=backend, ts=ts)
+        return counts
+    # probe the target keys only inside the source's bounding box.
+    # ``source_bounds`` ({dim: (lo, hi)} or {dim: (None, None)} for an
+    # empty source) lets a caller that already knows the box — e.g.
+    # one that computed it CONCURRENTLY with a preceding ingest job
+    # (guide §2.6) — skip this aggregation job.  The box CONFINES the
+    # probe read, so a too-narrow box would misread matched keys as
+    # new: the hint is checked, not trusted — every source row is
+    # tested against it inside the tasks that already consume the
+    # source, and one outside it fails the merge before its task
+    # writes.
+    if source_bounds is not None:
+        missing_b = [d for d in dim_names if d not in source_bounds]
+        if missing_b:
+            raise ValueError(f"source_bounds lacks dimensions: {missing_b}")
+        bounds = {}
+        for d in dim_names:
+            lo, hi = source_bounds[d]
+            bounds[f"{d}_lo"], bounds[f"{d}_hi"] = lo, hi
+        source = _check_source_bounds(source, source_bounds, dim_names)
+    else:
+        keyed = (
+            source.groupBy(*dim_names).count() if dups_in_bounds else source
+        )
+        bounds = keyed.agg(
+            *[F.min(d).alias(f"{d}_lo") for d in dim_names],
+            *[F.max(d).alias(f"{d}_hi") for d in dim_names],
+            *([F.max("count").alias("__dups")] if dups_in_bounds else []),
+        ).collect()[0]
+        if dups_in_bounds and (bounds["__dups"] or 0) > 1:
+            raise ValueError(dup_msg)
+    if bounds[f"{dim_names[0]}_lo"] is None:
+        # empty source: nothing matches, nothing is written
+        counts["written"] = 0
         if return_counts:
-            counts["matched"], counts["not_matched"] = matched, not_matched
-            counts["written"] = (
-                (matched if when_matched == "update" else 0)
-                + (not_matched if when_not_matched == "insert" else 0)
-            )
+            counts["matched"] = counts["not_matched"] = 0
             if when_matched == "delete":
-                counts["deleted"] = matched
-        if fused:
-            return counts
-        if need_split:
-            if when_matched == "delete" and flagged is not None:
-                from tiledb_mariadb_spark.sources.tiledb_native_write import (  # noqa: PLC0415
-                    write_delete_condition,
-                )
+                counts["deleted"] = 0
+        return counts
+    box = {d: (bounds[f"{d}_lo"], bounds[f"{d}_hi"]) for d in dim_names}
+    # distinct: an allows_dups target may hold the same key many times —
+    # "matched" means the key exists, and a dup would fan the probe join
+    # out (wrong counts, dup writes)
+    tgt_keys = read_array(
+        spark, uri, backend=backend, columns=[],
+        dim_ranges=box, target_splits=target_splits,
+    ).select(*dim_names).distinct().withColumn("__m", F.lit(1))
+    flagged = source.join(tgt_keys, on=dim_names, how="left")
 
-                # driver-side IN-list is bounded: take(N+1) caps the
-                # collect, and over-limit merges are refused with a
-                # pointer to the predicate form (which never collects)
-                key_rows = (
-                    flagged.filter(F.col("__m").isNotNull())
-                    .select(dim_names[0])
-                    .take(max_delete_keys + 1)
-                )
-                if len(key_rows) > max_delete_keys:
-                    raise ValueError(
-                        f"when_matched='delete' matched more than "
-                        f"{max_delete_keys} keys; a driver-side IN-list "
-                        "delete at that scale is unsafe — use "
-                        "write_delete_condition with a range/predicate "
-                        "form, or raise max_delete_keys explicitly"
-                    )
-                keys = [r[dim_names[0]] for r in key_rows]
-                if keys:
-                    # one O(|keys|) .del commit — no fragment rewritten;
-                    # for corpus-scale purges use a PREDICATE delete
-                    write_delete_condition(
-                        uri, [(dim_names[0], "in", sorted(keys))], ts=ts
-                    )
-            if counts["written"] != 0:
-                write_array(to_write, uri, backend=backend, ts=ts)
-            if flagged is not None and return_counts:
-                flagged.unpersist()
-            return counts
-        if flagged is not None and return_counts:
+    def _set_counts(matched, not_matched):
+        counts["matched"], counts["not_matched"] = matched, not_matched
+        counts["written"] = (
+            (matched if when_matched == "update" else 0)
+            + (not_matched if when_not_matched == "insert" else 0)
+        )
+
+    if when_matched != "delete":
+        # ONE pass over the probe join: a mapInPandas keeps each
+        # partition's clause-kept rows, writes them, and returns per-task
+        # (matched, total) rows with the action's result — exactly-once
+        # by construction (the counts ride the task results, not
+        # accumulators).  The fragment layout is the filtered write's:
+        # the same join-output partitions, one fragment per partition
+        # with kept rows (update+insert keeps every row).
+        if (
+            return_counts
+            or when_matched == "update"
+            or when_not_matched == "insert"
+        ):
+            m_, n_ = _merge_write_and_count(
+                flagged, uri, backend, when_matched, when_not_matched, ts,
+            )
+            if return_counts:
+                _set_counts(m_, n_ - m_)
+        else:
+            counts["written"] = 0  # skip + skip, uncounted: no pass
+        return counts
+
+    # when_matched="delete": the driver-side key collection below
+    # consumes the probe a second time, so this shape keeps the
+    # persist + agg + filtered-write structure (its max_delete_keys
+    # refusal must land before any insert does)
+    from tiledb_mariadb_spark.sources.tiledb_native_write import (  # noqa: PLC0415
+        write_delete_condition,
+    )
+
+    if return_counts:
+        flagged = flagged.persist()
+        agg = flagged.agg(
+            F.count(F.col("__m")).alias("m"),
+            F.count(F.lit(1)).alias("n"),
+        ).collect()[0]
+        _set_counts(agg["m"], agg["n"] - agg["m"])
+        counts["deleted"] = agg["m"]
+    elif when_not_matched == "skip":
+        counts["written"] = 0
+    # driver-side IN-list is bounded: take(N+1) caps the collect, and
+    # over-limit merges are refused with a pointer to the predicate
+    # form (which never collects)
+    key_rows = (
+        flagged.filter(F.col("__m").isNotNull())
+        .select(dim_names[0])
+        .take(max_delete_keys + 1)
+    )
+    if len(key_rows) > max_delete_keys:
+        if return_counts:
             flagged.unpersist()
-    # pure upsert: one fragment write, zero target reads
-    write_array(source, uri, backend=backend, ts=ts)
+        raise ValueError(
+            f"when_matched='delete' matched more than "
+            f"{max_delete_keys} keys; a driver-side IN-list "
+            "delete at that scale is unsafe — use "
+            "write_delete_condition with a range/predicate "
+            "form, or raise max_delete_keys explicitly"
+        )
+    keys = [r[dim_names[0]] for r in key_rows]
+    if keys:
+        # one O(|keys|) .del commit — no fragment rewritten; for
+        # corpus-scale purges use a PREDICATE delete
+        write_delete_condition(
+            uri, [(dim_names[0], "in", sorted(keys))], ts=ts
+        )
+    if when_not_matched == "insert" and counts["written"] != 0:
+        write_array(
+            flagged.filter(F.col("__m").isNull()).drop("__m"),
+            uri, backend=backend, ts=ts,
+        )
+    if return_counts:
+        flagged.unpersist()
     return counts
 
 
@@ -2566,7 +2565,7 @@ def write_array(
 def consolidate_array(
     spark: SparkSession,
     uri: str,
-    target_splits: int = 16,
+    target_splits: Optional[int] = None,
     encryption_key: Optional[Any] = None,
 ) -> int:
     """DISTRIBUTED fragment consolidation for native arrays — the
@@ -2588,6 +2587,12 @@ def consolidate_array(
     rule and listed in a ``.vac`` manifest for ``vacuum_native_array``;
     delete commits inside ``[t1, t2]`` are baked in and retired with
     them.  Returns the number of new fragments (0 = nothing to merge).
+
+    Each split is one task and writes one fragment.  ``target_splits``
+    None sizes the split count by cells like a read
+    (:func:`size_read_splits` over the metadata bound, at most 16), so
+    a small array consolidates into ONE fragment; an explicit value is
+    the exact split count.
 
     DENSE arrays consolidate the same way over dim0 BANDS of the
     visible fragments' bounding box (the read-presence surface): each
@@ -2636,6 +2641,10 @@ def consolidate_array(
         t2 += 1
     backend = NativeDecoderBackend(encryption_key=encryption_key)
     info = backend.info(uri)
+    if target_splits is None:
+        target_splits = size_read_splits(
+            16, estimate_read_cells(backend, uri, info)
+        )
     weights_fn = getattr(backend, "split_weights", None)
     weights = weights_fn(uri) if weights_fn else None
     splits = plan_splits(info, None, target_splits, weights=weights)
@@ -2825,7 +2834,7 @@ def consolidate_array_incremental(
     ratio: float = 3.0,
     min_run: int = 2,
     max_run: int = 10,
-    target_splits: int = 8,
+    target_splits: Optional[int] = None,
     encryption_key: Optional[Any] = None,
 ) -> int:
     """Distributed INCREMENTAL consolidation for SPARSE native arrays:
@@ -2841,6 +2850,10 @@ def consolidate_array_incremental(
     sorts exactly where the run sorted, so the global newest-wins order
     is unchanged.  Returns the number of new fragments (0 = no
     admissible runs — e.g. sizes too skewed, nothing to merge).
+    ``target_splits`` None sizes every run's split count by the cells
+    of the whole array (:func:`size_read_splits`, at most 8) — an
+    over-count for any run, never more splits than the cap; an
+    explicit value is the exact split count.
 
     DENSE arrays (round 7): a dense subset-merge materializes FILLS for
     gap cells inside the run's union bounding box, which would shadow
@@ -2942,6 +2955,10 @@ def consolidate_array_incremental(
 
     backend = NativeDecoderBackend(encryption_key=encryption_key)
     info = backend.info(uri)
+    if target_splits is None:
+        target_splits = size_read_splits(
+            8, estimate_read_cells(backend, uri, info)
+        )
     weights_fn = getattr(backend, "split_weights", None)
     weights = weights_fn(uri) if weights_fn else None
     splits = plan_splits(info, None, target_splits, weights=weights)
@@ -3108,7 +3125,7 @@ def maintain_array(
     vacuum: bool = True,
     incremental: bool = True,
     encryption_key: Optional[Any] = None,
-    target_splits: int = 16,
+    target_splits: Optional[int] = None,
     expire_before: Optional[int] = None,
 ) -> dict:
     """One-call maintenance loop — the mode-dispatch surface of
@@ -3131,6 +3148,10 @@ def maintain_array(
       retention — physically drop fragments wholly older than the
       cutoff and any `.del` that can no longer match
       (``expire_native_fragments``); the daily keep-N-days pass.
+
+    ``target_splits`` reaches the ``fragments`` mode as is (None =
+    sized by cells there, an explicit value is the exact split count)
+    and the ``fragment_meta`` fold (None = 16).
 
     Returns per-mode results: fragments merged / paths written /
     entries vacuumed.  Unknown modes raise (libtiledb rejects unknown
@@ -3181,7 +3202,7 @@ def maintain_array(
         # last: the fold then covers the post-consolidation layout
         out["fragment_meta"] = consolidate_fragment_meta(
             uri, encryption_key=encryption_key, spark=spark,
-            target_splits=target_splits,
+            target_splits=16 if target_splits is None else target_splits,
         )
     if vacuum:
         out["vacuumed"] = vacuum_native_array(uri)
